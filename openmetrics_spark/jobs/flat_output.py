@@ -20,10 +20,15 @@ Scale notes: each inferred-join stage shuffles on its scope keys —
 all scopes share the (platform_id, log_user_id) prefix, so Spark
 reuses the exchange across the fallback stages; the dims stay
 per-user so skew maps to hot users (AQE skew-join splits those).
+Each join's output is staged to parquet before the next stage reads
+it: the lineage cut the reference makes at its Kafka topics, without
+which every downstream plan reprints the whole upstream chain once per
+scope rank.
 """
 
 from __future__ import annotations
 
+import uuid
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
@@ -56,6 +61,7 @@ from openmetrics_spark.operators.validate import (
     validate_impression,
     validate_view,
 )
+from openmetrics_spark.tables import stage_parquet
 
 MIN10 = 10 * 60 * 1000
 MIN30 = 30 * 60 * 1000
@@ -89,6 +95,9 @@ def run_flat_output(
     """Returns the output tables + side tables, keyed by name."""
     cfg = cfg or FlatOutputConfig()
     side: dict[str, DataFrame] = {}
+    # per-call stage tags: a later run must not overwrite the files
+    # this run's lazy outputs still read
+    run = uuid.uuid4().hex
 
     # 1. validate (errors → side), 2. dedupe first-wins per primary key
     view, side["invalid_view"] = validate_view(view)
@@ -142,7 +151,7 @@ def run_flat_output(
         right_id="insertion_id",
         right_outer=True,
     )
-    insertions = ins_joined.select(
+    insertions = stage_parquet(ins_joined, f"flat_output_{run}_ins").select(
         "platform_id",
         "log_user_id",
         F.coalesce(F.col("__lpick.view_id"), F.col("view_id")).alias("view_id"),
@@ -179,6 +188,7 @@ def run_flat_output(
         right_outer=True,
         content_filter=("content_id", "content_id"),
     )
+    imp_joined = stage_parquet(imp_joined, f"flat_output_{run}_imp")
     side["dropped_unjoined_impression"] = imp_joined.filter(
         F.col("__lpick").isNull()
     ).drop("__lpick")
@@ -227,6 +237,7 @@ def run_flat_output(
         right_outer=True,
         content_filter=("content_id", "content_id"),
     )
+    act_joined = stage_parquet(act_joined, f"flat_output_{run}_act")
     side["dropped_unjoined_action"] = act_joined.filter(
         F.col("__lpick").isNull()
     ).drop("__lpick")

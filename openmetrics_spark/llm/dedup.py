@@ -201,9 +201,8 @@ def ngram_jaccard_pairs(
     # hash (exploded_shingles_from_tok). Exactly one input column form
     # must be named: passing text_col on a tok-only frame (or both)
     # was accepted-and-ignored before, which hid real column mistakes.
-    assert (text_col is None) != (tok_col is None), (
-        "pass exactly one of text_col / tok_col"
-    )
+    if (text_col is None) == (tok_col is None):
+        raise ValueError("pass exactly one of text_col / tok_col")
     docs = spread_for_compute(docs)
     if tok_col is not None:
         posting = exploded_shingles_from_tok(docs, id_col, tok_col, n)

@@ -12,22 +12,23 @@ these are the batch (DataFrame) twins:
   join: right rows match left rows within an event-time interval
   (reference: pipeline/.../common/functions/inferred/BaseInferred.java,
   explicit-id path :304-481).
-- ``nearest_join`` — the inference portion's tie-break rule: among
-  candidates in the window, pick the TEMPORALLY NEAREST left row
-  (reference: BaseInferred.java:605-650 binary-searched nearest match).
-- ``inferred_join`` — the full scope-fallback join: try the most
-  specific ancestor key first, fall back scope by scope, nearest-in-
-  time within each scope (reference: BaseInferred.java:39-734 and the
-  three instances ViewResponseInsertion/InsertionImpression/
+- ``inferred_join`` — the full scope-fallback join: try the explicit
+  FK, then the most specific ancestor key, fall back scope by scope,
+  nearest-in-time within each scope (reference: BaseInferred.java:39-734,
+  the binary-searched nearest match at :605-650, and the three
+  instances ViewResponseInsertion/InsertionImpression/
   ImpressionAction ProcessFunction.java).
 
 Scale notes: ``asof_join`` uses the union+last_value trick — ONE
 shuffle+sort of |L|+|R| rows, no range-explosion, no per-key loop; this
-is the standard scalable as-of on MPP engines. ``nearest_join`` joins
-on equi-keys first (so Catalyst plans a hash/SMJ join, never a
-nested-loop), filters to the window, then takes min_by(|Δt|) — with a
-map-side partial aggregate. ``inferred_join`` runs one nearest_join
-per scope on the still-unmatched remainder, which shrinks every stage.
+is the standard scalable as-of on MPP engines. ``inferred_join`` is
+partition-then-aggregate: each scope joins on its equi-keys (so
+Catalyst plans a hash/SMJ join, never a nested-loop) and filters to the
+window, every candidate pair is tagged with its scope's rank, and the
+union of all ranks goes through ONE shuffle on the right id and one
+``min_by(rank, |Δt|, ...)`` aggregate. No anti-join chain, no
+lineage cut inside the operator: callers that chain inferred joins
+cut lineage with ``tables.stage_parquet`` at their stage boundaries.
 """
 
 from __future__ import annotations
@@ -137,61 +138,23 @@ class Scope:
     keys: tuple[str, ...]
 
 
-def nearest_join(
+def _candidates(
     left: DataFrame,
     right: DataFrame,
-    on: Sequence[str],
-    left_ts: str,
-    right_ts: str,
-    window_before_ms: int,
-    window_after_ms: int,
-    left_payload: Sequence[str],
-    right_id: str,
-    content_filter: tuple[str, str] | None = None,
+    cond: list[Column],
+    rank: int,
+    dist: Column,
 ) -> DataFrame:
-    """For each right row, the single temporally-nearest left row with
-    ``right_ts - window_before_ms <= left_ts <= right_ts +
-    window_after_ms``, equi on ``on``. Ties (same |Δt|) break toward
-    the EARLIER left row, then smallest payload — deterministic.
-
-    ``content_filter=(left_col, right_col)``: when the right row
-    carries a content id, candidates must carry the same one
-    (reference: inferred/ContentId.java:66-95 — content-id narrowed
-    scopes).
-
-    Returns right_id + ``__lpick`` struct (null if no candidate).
-    """
-    lms = F.unix_millis(left[left_ts]).alias("__lms")
-    rms = F.unix_millis(right[right_ts]).alias("__rms")
-    lsel = [*on, lms, F.struct(*[left[c] for c in left_payload]).alias("__lrow")]
-    rsel = [*on, rms, right[right_id].alias(right_id)]
-    if content_filter is not None:
-        lc, rc = content_filter
-        lsel.append(left[lc].alias("__lcontent"))
-        rsel.append(right[rc].alias("__rcontent"))
-    # explicit side aliases: left/right usually derive from the same
-    # base frame, and same-name equality on shared-lineage frames trips
-    # Spark's "trivially true equals predicate" ambiguity warning
-    l = left.select(*lsel).alias("__L")
-    r = right.select(*rsel).alias("__R")
-    cond = [F.col(f"__L.{c}") == F.col(f"__R.{c}") for c in on] + [
-        F.col("__lms") >= F.col("__rms") - F.lit(window_before_ms),
-        F.col("__lms") <= F.col("__rms") + F.lit(window_after_ms),
-    ]
-    if content_filter is not None:
-        cond.append(
-            F.col("__rcontent").isNull()
-            | (F.col("__rcontent") == "")
-            | (F.col("__lcontent") == F.col("__rcontent"))
-        )
-    cand = r.join(l, cond, "inner")
-    dist = F.abs(F.col("__lms") - F.col("__rms"))
-    pick = cand.groupBy(right_id).agg(
-        F.min_by(
-            "__lrow", F.struct(dist.alias("d"), F.col("__lms"), F.col("__lrow"))
-        ).alias("__lpick")
+    """One rank's candidate pairs: ``__rid, __rank, __d, __lms, __lrow``
+    for every (right, left) pair that satisfies ``cond``. ``left`` and
+    ``right`` are the aliased ``__L`` / ``__R`` projections."""
+    return right.join(left, cond, "inner").select(
+        "__rid",
+        F.lit(rank).alias("__rank"),
+        dist.cast("long").alias("__d"),
+        "__lms",
+        "__lrow",
     )
-    return pick
 
 
 def inferred_join(
@@ -209,86 +172,102 @@ def inferred_join(
     content_filter: tuple[str, str] | None = None,
 ) -> DataFrame:
     """Scope-fallback nearest-in-time join (the batch oracle of the
-    reference's BaseInferred state machine).
+    reference's BaseInferred state machine), as ONE ranked pick.
 
-    1. If ``fk=(right_fk_col, left_pk_col)`` is given, right rows whose
-       FK is set join directly on it (the "explicit id join").
-    2. Remaining right rows fall through ``scopes`` in order; each
-       scope is a :func:`nearest_join` on that scope's equi-keys within
-       the window. A right row matched at scope i never reaches scope
-       i+1.
-    3. ``right_outer=True`` keeps unmatched right rows with a null
-       payload (the view→insertion instance); else they are dropped
-       (inner, like insertion→impression and impression→action).
+    Every candidate (right row, left row) pair carries a rank:
+
+    - rank 0: if ``fk=(right_fk_col, left_pk_col)`` is given, the right
+      row's FK equals the left row's PK (the "explicit id join"; no
+      time window). A dangling FK yields no rank-0 candidate, so the
+      row falls through to the scopes.
+    - rank i+1: scope i's equi-keys are all non-null (and non-empty
+      for strings) and equal, the left timestamp is within
+      ``[right_ts - window_before_ms, right_ts + window_after_ms]``,
+      and, with ``content_filter=(left_col, right_col)``, the left row
+      carries the right row's content id whenever the right row has
+      one (reference: inferred/ContentId.java:66-95).
+
+    The candidates of every rank are unioned, shuffled once on the
+    right id and reduced by one ``min_by`` over
+    ``(rank, |Δt|, left_ms, left_payload)``: the lowest rank wins
+    before distance is compared, so a row matched at scope i keeps
+    that pick even when scope i+1 has a nearer candidate; within a
+    rank the temporally nearest, then earlier, then smallest payload
+    wins — deterministic (reference: BaseInferred.java:605-650).
+
+    ``right_outer=True`` keeps unmatched right rows with a null
+    ``__lpick`` (the view→insertion instance); else they are dropped
+    (inner, like insertion→impression and impression→action).
+
+    The operator does not cut lineage: ``left`` and ``right`` are each
+    read once per rank. Callers that chain joins, each stage's left
+    being the previous stage's output, cut lineage at the stage
+    boundaries with ``tables.stage_parquet`` (the reference splits the
+    same chain at Kafka topics).
 
     Returns: right columns + ``__lpick`` struct of ``left_payload``.
     """
-    # Truncate lineage once per join: the scope-fallback chain
-    # references `left` and `right` several times each, and in a
-    # multi-stage pipeline each stage's left is the whole upstream
-    # plan — without a cut the analyzer's tree grows exponentially.
-    # (The reference bounds the same blow-up by splitting jobs at
-    # Kafka topics; localCheckpoint is the in-process analog.)
-    left = left.localCheckpoint(eager=False)
-    right = right.withColumn("__rid", F.col(right_id)).localCheckpoint(eager=False)
-    remaining = right
-    picks: list[DataFrame] = []
+    lrow = F.struct(*[left[c] for c in left_payload]).alias("__lrow")
+    lms = F.unix_millis(left[left_ts]).alias("__lms")
+    rkeyed = right.withColumn("__rid", F.col(right_id))
+    cands: list[DataFrame] = []
 
     if fk is not None:
         rfk, lpk = fk
-        with_fk = remaining.filter(F.col(rfk).isNotNull())
-        remaining = remaining.filter(F.col(rfk).isNull())
-        l = left.select(
-            F.col(lpk).alias("__lpk"),
-            F.struct(*[F.col(c) for c in left_payload]).alias("__lrow"),
-            F.unix_millis(F.col(left_ts)).alias("__lms"),
-        )
-        r = with_fk.select("__rid", F.col(rfk).alias("__rfk"))
-        m = (
-            r.join(l, F.col("__rfk") == F.col("__lpk"), "inner")
-            .groupBy("__rid")
-            .agg(
-                F.min_by("__lrow", F.struct("__lms", "__lrow")).alias("__lpick")
-            )
-        )
-        picks.append(m)
-        matched_ids = m.select(F.col("__rid").alias("__mrid"))
-        remaining = remaining.unionByName(
-            with_fk.join(
-                matched_ids, with_fk["__rid"] == matched_ids["__mrid"], "left_anti"
-            )
+        l = left.select(left[lpk].alias("__lpk"), lms, lrow).alias("__L")
+        r = rkeyed.select("__rid", F.col(rfk).alias("__rfk")).alias("__R")
+        cands.append(
+            _candidates(l, r, [F.col("__rfk") == F.col("__lpk")], 0, F.lit(0))
         )
 
     string_cols = {f.name for f in right.schema.fields if f.dataType.simpleString() == "string"}
-    for scope in scopes:
-        cand_right = remaining
-        for k in scope.keys:
-            cand_right = cand_right.filter(F.col(k).isNotNull())
+    for i, scope in enumerate(scopes, start=1):
+        on = scope.keys
+        lsel = [*on, lms, lrow]
+        rsel = [*on, F.unix_millis(F.col(right_ts)).alias("__rms"), "__rid"]
+        if content_filter is not None:
+            lc, rc = content_filter
+            lsel.append(left[lc].alias("__lcontent"))
+            rsel.append(F.col(rc).alias("__rcontent"))
+        r = rkeyed
+        for k in on:
+            r = r.filter(F.col(k).isNotNull())
             if k in string_cols:
-                cand_right = cand_right.filter(F.col(k) != "")
-        m = nearest_join(
-            left,
-            cand_right,
-            scope.keys,
-            left_ts,
-            right_ts,
-            window_before_ms,
-            window_after_ms,
-            left_payload,
-            "__rid",
-            content_filter=content_filter,
-        )
-        picks.append(m)
-        remaining = remaining.join(
-            m.select("__rid"), on="__rid", how="left_anti"
-        )
+                r = r.filter(F.col(k) != "")
+        # explicit side aliases: left/right usually derive from the same
+        # base frame, and same-name equality on shared-lineage frames
+        # trips Spark's "trivially true equals predicate" ambiguity
+        l = left.select(*lsel).alias("__L")
+        r = r.select(*rsel).alias("__R")
+        cond = [F.col(f"__L.{c}") == F.col(f"__R.{c}") for c in on] + [
+            F.col("__lms") >= F.col("__rms") - F.lit(window_before_ms),
+            F.col("__lms") <= F.col("__rms") + F.lit(window_after_ms),
+        ]
+        if content_filter is not None:
+            cond.append(
+                F.col("__rcontent").isNull()
+                | (F.col("__rcontent") == "")
+                | (F.col("__lcontent") == F.col("__rcontent"))
+            )
+        dist = F.abs(F.col("__lms") - F.col("__rms"))
+        cands.append(_candidates(l, r, cond, i, dist))
 
-    all_picks = picks[0]
-    for p in picks[1:]:
-        all_picks = all_picks.unionByName(p)
-
+    all_cands = cands[0]
+    for c in cands[1:]:
+        all_cands = all_cands.unionByName(c)
+    pick = all_cands.groupBy("__rid").agg(
+        F.min_by(
+            "__lrow",
+            F.struct(
+                F.col("__rank").alias("rank"),
+                F.col("__d").alias("d"),
+                F.col("__lms"),
+                F.col("__lrow"),
+            ),
+        ).alias("__lpick")
+    )
     how = "left" if right_outer else "inner"
-    return right.join(all_picks, on="__rid", how=how).drop("__rid")
+    return rkeyed.join(pick, on="__rid", how=how).drop("__rid")
 
 
 def fifo_dedupe(

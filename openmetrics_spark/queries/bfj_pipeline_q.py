@@ -73,7 +73,7 @@ from openmetrics_spark.sources.envelope import (
     _plural,
     split_log_requests,
 )
-from openmetrics_spark.tables import pin, table
+from openmetrics_spark.tables import pin, stage_parquet, table
 
 MIN10 = 10 * 60 * 1000
 MIN30 = 30 * 60 * 1000
@@ -739,6 +739,12 @@ def _run_pipeline(
     )
 
     # -- view → insertion ---------------------------------------------------
+    # Each inferred join's output is staged to parquet, not pin()ned:
+    # that is the pipeline's lineage cut, where the reference splits
+    # the same chain at Kafka topics. The next stage's plan starts from
+    # a file scan instead of reprinting the whole upstream chain once
+    # per scope rank, which multiplies with every chained join.
+    stage_sfx = "_skewed" if skew else ""
     v_side = views.select(
         "platform_id",
         "log_user_id",
@@ -759,7 +765,7 @@ def _run_pipeline(
         right_id="insertion_id",
         right_outer=True,
     )
-    ins2 = pin(
+    ins2 = stage_parquet(
         vjoin.select(
             "platform_id",
             "log_user_id",
@@ -769,7 +775,8 @@ def _run_pipeline(
             "position",
             "insertion_ms",
             F.col("__lpick.view_id").alias("view_id"),
-        )
+        ),
+        f"bfj_pipeline_ins2{stage_sfx}",
     )
 
     # -- insertion → impression ----------------------------------------------
@@ -802,7 +809,7 @@ def _run_pipeline(
         right_outer=True,
         content_filter=("content_id", "content_id"),
     )
-    imp_joined = pin(
+    imp_joined = stage_parquet(
         ijoin.select(
             "platform_id",
             "log_user_id",
@@ -810,7 +817,8 @@ def _run_pipeline(
             "content_id",
             "impression_ms",
             F.col("__lpick.insertion_id").alias("insertion_id"),
-        )
+        ),
+        f"bfj_pipeline_imp_joined{stage_sfx}",
     )
     imp_matched = imp_joined.filter(F.col("insertion_id").isNotNull())
 
@@ -880,7 +888,7 @@ def _run_pipeline(
         right_id="tiny_id",
         right_outer=True,
     )
-    act_joined = pin(
+    act_joined = stage_parquet(
         ajoin.select(
             "platform_id",
             "log_user_id",
@@ -892,7 +900,8 @@ def _run_pipeline(
             "action_ts",
             F.col("__lpick.impression_id").alias("matched_impression_id"),
             F.col("__lpick.insertion_id").alias("matched_insertion_id"),
-        )
+        ),
+        f"bfj_pipeline_act_joined{stage_sfx}",
     )
     attributed = act_joined.filter(F.col("matched_impression_id").isNotNull())
 

@@ -17,6 +17,31 @@ from pyspark.sql import SparkSession
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
+def default_driver_mem() -> str:
+    """``spark.driver.memory`` when ``SPARK_GRAFT_DRIVER_MEM`` is unset:
+    a quarter of the machine's memory (MemTotal, or the cgroup limit if
+    lower), capped at 48g. A fixed 48g heap on a smaller host lets the
+    JVM grow past physical memory until the kernel kills it."""
+    cap_mb = 48 * 1024
+    try:
+        with open("/proc/meminfo") as f:
+            mem_mb = int(f.readline().split()[1]) // 1024
+    except OSError:  # no procfs: keep the cap
+        return f"{cap_mb}m"
+    for limit_file in (
+        "/sys/fs/cgroup/memory.max",  # cgroup v2
+        "/sys/fs/cgroup/memory/memory.limit_in_bytes",  # cgroup v1
+    ):
+        try:
+            with open(limit_file) as f:
+                limit = f.read().strip()
+        except OSError:
+            continue
+        if limit.isdigit():
+            mem_mb = min(mem_mb, int(limit) >> 20)
+    return f"{max(1024, min(cap_mb, mem_mb // 4))}m"
+
+
 def get_spark(app_name: str = "openmetrics_spark", cpus: int | None = None) -> SparkSession:
     """Build (or fetch) the tuned SparkSession.
 
@@ -32,7 +57,10 @@ def get_spark(app_name: str = "openmetrics_spark", cpus: int | None = None) -> S
         # cluster this would be set to ~2-3x total cores (or left to AQE
         # initialPartitionNum) — AQE coalesces down from there.
         # local mode = driver-only JVM; this is the one memory knob
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_mem(),
+        )
         .config("spark.sql.shuffle.partitions", str(cpus))
         .config("spark.default.parallelism", str(cpus))
         # AQE: runtime partition coalescing, skew-join splitting, and
@@ -70,8 +98,8 @@ def get_spark(app_name: str = "openmetrics_spark", cpus: int | None = None) -> S
         # ... and let AQE rewrite a planned SMJ to SHJ at runtime when
         # every post-shuffle partition's build side is small (default 0
         # = off; guide §3.1). Catches the joins whose STATIC size
-        # estimate is too bad to flip at plan time (e.g. the
-        # scope-fallback anti-joins on aggregated match ids).
+        # estimate is too bad to flip at plan time (e.g. joins whose
+        # build side is an aggregate of match ids).
         .config(
             "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
             os.environ.get("SPARK_GRAFT_SHJ_LOCAL_MAP", str(64 * 1024 * 1024)),

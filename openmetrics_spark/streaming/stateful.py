@@ -271,11 +271,11 @@ def _decide_ready(
     are ``[ms, id, scope_values]`` records; ready rows are ``(ms, id,
     scope_values)`` tuples already sorted.
 
-    Tie-break mirrors the batch operator: batch nearest_join breaks
-    (|Δt|, left_ms) ties on the payload struct, whose first field is
-    the left's pk STRING — in scopes mode that string rides in the fk
-    slot of the scope values; hashed ids do NOT sort like the strings
-    they hash.
+    Tie-break mirrors the batch operator: batch inferred_join's ranked
+    pick breaks (rank, |Δt|, left_ms) ties on the payload struct, whose
+    first field is the left's pk STRING — in scopes mode that string
+    rides in the fk slot of the scope values; hashed ids do NOT sort
+    like the strings they hash.
 
     Indexed candidate lookup, rebuilt per invocation (r10 verdict ask:
     the old per-ready-row linear scan was O(|ready|x|views|), which a

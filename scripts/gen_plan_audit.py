@@ -3,8 +3,10 @@ headline queries, with the scan/exchange/codegen evidence the
 design-for-100TB claims rest on (pushed filters, pruned schemas,
 broadcast vs shuffle joins, whole-stage codegen spans).
 
-Usage: python scripts/gen_plan_audit.py   (reads $SPARK_GRAFT_SF_DIR,
-default /root/testdata/sf0.01 — plan SHAPE, not timing, is the point).
+Usage: python scripts/gen_plan_audit.py [QUERY ...]   (reads
+$SPARK_GRAFT_SF_DIR, default the sf0.01 test data — plan SHAPE, not
+timing, is the point). With no QUERY every audited plan is rewritten;
+with names, only those sections of the existing file are replaced.
 """
 
 from __future__ import annotations
@@ -43,14 +45,37 @@ AUDITED = [
 ]
 
 
-def main() -> int:
+def _splice(text: str, sections: dict[str, list[str]]) -> str:
+    """Replace each ``## name`` section of ``text`` (up to the next
+    ``## `` heading) with its regenerated lines."""
+    out: list[str] = []
+    skipping = False
+    for line in text.splitlines():
+        if line.startswith("## "):
+            name = line[3:].strip()
+            skipping = name in sections
+            if skipping:
+                out += sections.pop(name)
+                continue
+        if not skipping:
+            out.append(line)
+    if sections:
+        raise SystemExit(f"no section for {sorted(sections)} in PLANS.md")
+    return "\n".join(out) + "\n"
+
+
+def main(argv: list[str]) -> int:
     from openmetrics_spark.session import get_spark
     from openmetrics_spark.queries import all_queries
 
+    names = argv or AUDITED
+    unknown = sorted(set(names) - set(AUDITED))
+    if unknown:
+        raise SystemExit(f"not audited: {unknown}")
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     spark = get_spark("plan-audit")
     qs = all_queries()
-    out = [
+    head = [
         "# Physical-plan audit (generated by scripts/gen_plan_audit.py)",
         "",
         f"Executed plans at `{sf_dir}` — evidence for the plan-shape",
@@ -59,10 +84,12 @@ def main() -> int:
         "exchange counts. Regenerate after plan-affecting changes.",
         "",
     ]
+    sections: dict[str, list[str]] = {}
     mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
         "formatted"
     )
-    for name in AUDITED:
+    for name in names:
+        out = sections[name] = []
         df = qs[name].fn(spark, sf_dir)
         # execute THE DF'S OWN QueryExecution so AQE finalizes —
         # df.count() and even a write wrap the plan in a NEW execution
@@ -101,11 +128,16 @@ def main() -> int:
             out.append(f"... ({len(lines) - 120} more lines)")
         out += ["```", ""]
     path = os.path.join(_ROOT, "docs", "PLANS.md")
+    if argv:
+        with open(path) as f:
+            text = _splice(f.read(), sections)
+    else:
+        text = "\n".join(head + [l for n in names for l in sections[n]]) + "\n"
     with open(path, "w") as f:
-        f.write("\n".join(out) + "\n")
-    print(f"wrote {path} ({len(AUDITED)} plans)")
+        f.write(text)
+    print(f"wrote {path} ({len(names)} plans)")
     return 0
 
 
 if __name__ == "__main__":
-    raise SystemExit(main())
+    raise SystemExit(main(sys.argv[1:]))

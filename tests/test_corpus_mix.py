@@ -6,6 +6,7 @@ co-refactored oracle.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from openmetrics_spark.queries import all_queries
@@ -336,6 +337,18 @@ def test_leakage_safe_split_no_cross_split_pairs(spark, sf_dir):
     assert pairs, "fixture must contain near-dup pairs for this test"
     for p in pairs:
         assert split_of[p.doc_a] == split_of[p.doc_b], (p.doc_a, p.doc_b)
+
+
+def test_ngram_jaccard_pairs_rejects_ambiguous_input_column(spark):
+    """Exactly one of text_col / tok_col: both or neither is an error,
+    raised (not asserted) so it holds under ``python -O`` too."""
+    from openmetrics_spark.llm.dedup import ngram_jaccard_pairs
+
+    docs = spark.range(1).select(F.col("id").alias("doc_id"))
+    with pytest.raises(ValueError, match="exactly one"):
+        ngram_jaccard_pairs(docs, "doc_id")
+    with pytest.raises(ValueError, match="exactly one"):
+        ngram_jaccard_pairs(docs, "doc_id", text_col="text", tok_col="tok")
 
 
 def test_manifest_v3_composes_standalone_results(spark, sf_dir):

@@ -8,7 +8,7 @@ from pyspark.sql import functions as F
 
 from openmetrics_spark.operators.counters import last_time_and_count, sliding_counter
 from openmetrics_spark.operators.dedup import keep_first, pick_best
-from openmetrics_spark.operators.joins import asof_join, interval_join
+from openmetrics_spark.operators.joins import Scope, asof_join, inferred_join, interval_join
 from openmetrics_spark.operators.sessions import session_rollup
 
 
@@ -118,6 +118,74 @@ def test_interval_join_bounds(spark):
     out = interval_join(left, r2, ["key"], "lts", "rts", 0, 2000)
     got = sorted(r.rid for r in out.collect())
     assert got == [11, 12]
+
+
+def test_inferred_join_ranked_pick(spark):
+    """One ranked pick: FK first, then scope by scope; a lower rank wins
+    before distance is compared, within a rank the nearest, then the
+    earlier left row; the content filter narrows candidates."""
+    left = spark.createDataFrame(
+        [
+            ("i_1", "u", "r1", "c1", 100_000),
+            ("i_2", "u", "r2", "c1", 105_000),
+            ("i_3", "u", "r1", "c2", 110_000),
+            ("i_4", "v", "r9", "c1", 200_000),
+            ("i_5", "v", "r9", "c1", 202_000),
+            ("i_6", "w", "r5", "c1", 300_000),
+            ("i_7", "w", "r5", "c2", 295_000),
+        ],
+        "ins_id string, user string, req string, content string, ms long",
+    ).withColumn("ts", F.timestamp_millis("ms"))
+    right = spark.createDataFrame(
+        [
+            # FK hit: i_1 although scope 1 has i_2 at 500 ms
+            ("m_10", "i_1", "u", "r2", "c1", 105_500),
+            # dangling FK falls through to scope 1 (u, r2)
+            ("m_11", "i_9", "u", "r2", "c1", 105_200),
+            # scope 1 (u, r1) keeps i_1 at 4.9 s; scope 2 has i_2 at 100 ms
+            ("m_12", None, "u", "r1", None, 104_900),
+            # content filter: i_6 is nearer but carries c1
+            ("m_13", None, "w", "r5", "c2", 300_500),
+            # empty content id: no filter, the nearer i_6 wins
+            ("m_16", None, "w", "r5", "", 300_500),
+            # equal distance (1 s each way): the earlier left row wins
+            ("m_14", None, "v", "r9", "c1", 201_000),
+            # no candidate anywhere
+            ("m_15", None, "z", "r0", "c1", 500_000),
+        ],
+        "imp_id string, ins_fk string, user string, req string, content string, ms long",
+    ).withColumn("ts", F.timestamp_millis("ms"))
+
+    def run(right_outer):
+        out = inferred_join(
+            left,
+            right,
+            scopes=[Scope(("user", "req")), Scope(("user",))],
+            fk=("ins_fk", "ins_id"),
+            left_ts="ts",
+            right_ts="ts",
+            window_before_ms=10_000,
+            window_after_ms=1_000,
+            left_payload=["ins_id", "ms"],
+            right_id="imp_id",
+            right_outer=right_outer,
+            content_filter=("content", "content"),
+        )
+        rows = out.select("imp_id", F.col("__lpick.ins_id").alias("pick")).collect()
+        assert len(rows) == len({r.imp_id for r in rows})  # one row per right id
+        return {r.imp_id: r.pick for r in rows}
+
+    want = {
+        "m_10": "i_1",
+        "m_11": "i_2",
+        "m_12": "i_1",
+        "m_13": "i_7",
+        "m_16": "i_6",
+        "m_14": "i_4",
+        "m_15": None,
+    }
+    assert run(right_outer=True) == want
+    assert run(right_outer=False) == {k: v for k, v in want.items() if v is not None}
 
 
 def test_add_latest_impressions_exclusion_and_caps(spark):

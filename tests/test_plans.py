@@ -337,6 +337,16 @@ def test_bfj_pipeline_has_no_cartesian(spark, sf_dir):
     assert "CartesianProduct" not in plan, plan[:3000]
 
 
+def test_inferred_join_is_one_ranked_pick(spark, sf_dir):
+    """The insertion→impression join (FK + 3 scopes) is one ranked
+    min_by pick: no anti-join chain over the unmatched remainder and no
+    localCheckpoint lineage cut (an ExistingRDD scan) inside the
+    operator."""
+    plan = _plan(spark, sf_dir, "bfj_joined_impressions")
+    assert "LeftAnti" not in plan, plan[:3000]
+    assert "ExistingRDD" not in plan, plan[:3000]
+
+
 def test_curation_pipeline_no_cartesian_no_raw_doc_window(spark, sf_dir):
     """The composed curation chain must stay bucketed end to end: no
     CartesianProduct anywhere, and every Window runs over either the

@@ -32,20 +32,28 @@ events = st.lists(
 )
 
 
-@given(views=events, clicks=events)
+@given(
+    views=events,
+    clicks=events,
+    # click FKs: absent, a view id, or dangling (no view has id >= 25)
+    fks=st.lists(st.one_of(st.none(), st.integers(0, 40)), max_size=25),
+)
 @SET
-def test_inferred_join_matches_python_model(spark, views, clicks):
-    """Scope-fallback nearest pick: (u, k) preferred, (u) fallback,
-    window [-10m, 0], right-outer. Model mirrors nearest_join's
-    min_by(struct(dist, lms, payload)) tie-break."""
+def test_inferred_join_matches_python_model(spark, views, clicks, fks):
+    """FK first (dangling ids fall through), then scope fallback:
+    (u, k) preferred, (u) fallback, window [-10m, 0], right-outer.
+    Model mirrors the ranked pick's
+    min_by(struct(rank, dist, lms, payload)) tie-break."""
     from openmetrics_spark.operators.joins import Scope, inferred_join
 
     base = 1_700_000_000_000
     vrows = [
         (i, u, str(k), base + ts) for i, (u, k, ts) in enumerate(views)
     ]
+    fks = fks + [None] * (len(clicks) - len(fks))
     crows = [
-        (1000 + i, u, str(k), base + ts) for i, (u, k, ts) in enumerate(clicks)
+        (1000 + i, fk, u, str(k), base + ts)
+        for i, ((u, k, ts), fk) in enumerate(zip(clicks, fks))
     ]
     vdf = spark.createDataFrame(
         vrows or [(None, None, None, None)],
@@ -54,8 +62,8 @@ def test_inferred_join_matches_python_model(spark, views, clicks):
         "ts", F.timestamp_millis("ms")
     )
     cdf = spark.createDataFrame(
-        crows or [(None, None, None, None)],
-        "click_id long, u long, k string, ms long",
+        crows or [(None, None, None, None, None)],
+        "click_id long, fk long, u long, k string, ms long",
     ).filter(F.col("click_id").isNotNull()).withColumn(
         "ts", F.timestamp_millis("ms")
     )
@@ -63,7 +71,7 @@ def test_inferred_join_matches_python_model(spark, views, clicks):
         vdf,
         cdf,
         scopes=[Scope(("u", "k")), Scope(("u",))],
-        fk=None,
+        fk=("fk", "view_id"),
         left_ts="ts",
         right_ts="ts",
         window_before_ms=MIN10,
@@ -74,7 +82,11 @@ def test_inferred_join_matches_python_model(spark, views, clicks):
     ).select("click_id", F.col("__lpick.view_id").alias("view_id"))
     got = {r.click_id: r.view_id for r in out.collect()}
 
-    def pick(cu, ck, cms):
+    def pick(cfk, cu, ck, cms):
+        # rank 0: the FK names a view (no time window)
+        hits = [v for v in vrows if cfk is not None and v[0] == cfk]
+        if hits:
+            return min(hits, key=lambda c: (c[3], c[0]))[0]
         for scoped in (True, False):
             cands = [
                 (vid, vu, vk, vms)
@@ -84,12 +96,12 @@ def test_inferred_join_matches_python_model(spark, views, clicks):
                 and (not scoped or vk == ck)
             ]
             if cands:
-                # min_by(struct(dist, lms, struct(view_id, ms)))
+                # min_by(struct(rank, dist, lms, struct(view_id, ms)))
                 best = min(cands, key=lambda c: (abs(c[3] - cms), c[3], c[0]))
                 return best[0]
         return None
 
-    want = {cid: pick(cu, ck, cms) for cid, cu, ck, cms in crows}
+    want = {cid: pick(cfk, cu, ck, cms) for cid, cfk, cu, ck, cms in crows}
     assert got == want  # right-outer: every click present exactly once
 
 
