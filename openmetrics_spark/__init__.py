@@ -24,4 +24,11 @@ Package layout:
                 + its ANSI-SQL DuckDB oracle (the correctness gate)
 """
 
+from openmetrics_spark import _pyworker
+
 __version__ = "0.1.0"
+
+# Python workers import this package when they unpickle a function that
+# references one of its modules; from then on a reused worker stops
+# re-parsing its zip archives before every task (see _pyworker).
+_pyworker.install()

@@ -29,7 +29,6 @@ large keyspaces — state per key here is O(horizon/bucket), so the
 from __future__ import annotations
 
 import json
-import os
 from bisect import bisect_left, bisect_right
 from collections.abc import Sequence
 
@@ -38,6 +37,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     BooleanType,
+    IntegerType,
     LongType,
     StringType,
     StructField,
@@ -1214,25 +1214,25 @@ def _cumulate_sweep(
     return out, periods, timeout
 
 
-# How many state buckets the CUMULATE machine coarsens its keys into
-# (0 = key the state per user, the pre-r13 shape). Each
-# applyInPandasWithState invocation costs ~1 ms of fixed machinery
-# (JVM group iteration + Arrow framing + Python dispatch + GroupState
-# JSON round-trip) REGARDLESS of group size; with per-user keys a
-# drain pays (users x batches) invocations — the measured wall of the
-# stateful replays (r12 decomposition: 1500 keys x 4 batches ~= each
-# batch's whole addBatch time). Hashing users into a fixed bucket set
-# divides the invocation count by users-per-bucket while the sweep
-# core (and therefore every emitted row) is unchanged per user.
-# Scale note: this trades invocation count against state-write
-# amplitude — a touched bucket round-trips ALL its users' state. For
-# CUMULATE that is near-free: every user with open state has a timer
-# no later than its next step end, so in any replay whose batches
-# advance >= one step, every active user is touched every batch anyway
-# (the per-key form round-trips the same bytes in many more calls).
-# Deployments with micro-batches much shorter than the step should
-# raise the bucket count (env below) toward the active-key count.
-CUMULATE_BUCKETS = int(os.environ.get("SPARK_GRAFT_CUMULATE_BUCKETS", "64"))
+# Why the CUMULATE state is keyed by a hash bucket of the user, not the
+# user: each applyInPandasWithState group call pays fixed per-call work
+# (JVM group iteration, Arrow framing, Python dispatch, the GroupState
+# JSON round-trip), and per-user keys pay it users x batches times.
+# Hashing users into a fixed bucket set divides the call count by the
+# users per bucket; the per-user sweep core, and so every emitted row,
+# is unchanged. The per-call work is small beside each Python runner's
+# task setup (see ``openmetrics_spark._pyworker``), but with that setup
+# cut 64 buckets still beat per-user keying: one ombench
+# ``stream_cumulate`` run each (local[4], seed 904) took in a slice in
+# 0.72 s against 0.86 s per user, with micro-batches after the first of
+# 0.52-1.07 s against 0.55-1.17 s.
+# Scale note: a touched bucket round-trips ALL its users' state. For
+# CUMULATE that is near-free: every user with open state has a timer no
+# later than its next step end, so when batches advance >= one step
+# every active user is touched every batch anyway. Micro-batches much
+# shorter than the step want a bucket count nearer the active-key count.
+# The count is part of the checkpoint's identity: the bucketed state
+# records it, and a restart with another count raises.
 
 
 def stream_cumulate_counter(
@@ -1243,7 +1243,7 @@ def stream_cumulate_counter(
     period_ms: int,
     delay_ms: int = 1000,
     value_col: str | None = None,
-    n_buckets: int | None = None,
+    n_buckets: int = 64,
 ) -> DataFrame:
     """Streaming CUMULATE(step, period) — intra-period cumulative
     totals emitted at every step boundary that has data (reference:
@@ -1260,8 +1260,8 @@ def stream_cumulate_counter(
     step finalizes. Output matches the batch ``cumulate_metrics``:
     (period_ms, window_ms, key, n cumulative).
 
-    ``n_buckets`` (default ``CUMULATE_BUCKETS``, env-overridable)
-    coarsens the STATE key to ``pmod(xxhash64(key), n_buckets)``: one
+    ``n_buckets`` coarsens the STATE key to
+    ``pmod(xxhash64(key), n_buckets)``: one
     group-function invocation then sweeps every user in the bucket
     instead of paying the per-invocation machinery once per user.
     Emitted rows are bit-identical to the per-user keying (0 restores
@@ -1271,7 +1271,12 @@ def stream_cumulate_counter(
     swept — rows for step b are watermark-dropped before wm passes
     b+step, so any sweep at wm >= b+step sees the identical per-user
     state. The bucket timer is the min of its users' timers, so no
-    user is swept later than its own timer would have fired."""
+    user is swept later than its own timer would have fired. Null keys
+    are counted as their own user on both keyings, as the batch
+    ``cumulate_metrics`` groups them. The bucketed state records
+    ``n_buckets``; restoring it under another count raises
+    ``ValueError`` (users would be stranded in the wrong buckets), so a
+    new count needs a new checkpoint."""
     key_type = sdf.schema[key_col].dataType
     out_schema = StructType(
         [
@@ -1340,41 +1345,54 @@ def stream_cumulate_counter(
                 out, columns=["period_ms", "window_ms", "key", "n"]
             )
 
-    # bucketed twin of ``update``: state is {user: periods}; new rows
-    # group by (user, step bucket) — pandas groupby is fine here, its
-    # ~1 ms machinery amortizes over a whole bucket of users where the
-    # per-user form paid it per user — then every user runs the SAME
-    # sweep core and the bucket timer takes the min.
+    # bucketed twin of ``update``: state is the bucket count it was
+    # written under plus a JSON list of [user, periods] pairs (a JSON
+    # object's keys could not hold a null user, and would turn an int
+    # user into a string); new rows group by (user, step bucket) —
+    # pandas groupby is fine here, its ~1 ms machinery amortizes over a
+    # whole bucket of users where the per-user form paid it per user —
+    # then every user runs the SAME sweep core and the bucket timer
+    # takes the min.
     key_is_str = isinstance(key_type, StringType)
+    bucketed_state_schema = StructType(
+        [
+            StructField("n_buckets", IntegerType()),
+            StructField("users_json", StringType()),
+        ]
+    )
 
     def update_bucketed(key, pdf_iter, state: GroupState):
         import pandas as pd
 
         users: dict = {}
         if state.exists:
-            (pj,) = state.get
+            was, uj = state.get
+            if was != n_buckets:
+                raise ValueError(
+                    f"stream_cumulate_counter: the checkpoint's state has "
+                    f"n_buckets={was}, this query n_buckets={n_buckets}; "
+                    "a new bucket count needs a new checkpoint"
+                )
             users = {
-                (u if key_is_str else int(u)): {
+                u: {
                     int(p): [v[0], {int(b): n for b, n in v[1].items()}]
                     for p, v in per.items()
                 }
-                for u, per in json.loads(pj).items()
+                for u, per in json.loads(uj)
             }
         for pdf in pdf_iter:
             if not len(pdf):
                 continue
-            b = (pdf["__ms"] // step_ms) * step_ms
-            if value_col is None:
-                grp = pdf.assign(__b=b).groupby(["key", "__b"], sort=False).size()
-            else:
-                # int64-exact grouped sum (never float-weighted)
-                grp = (
-                    pdf.assign(__b=b)
-                    .groupby(["key", "__b"], sort=False)["__v"]
-                    .sum()
-                )
+            # the key arrives as a string: pyspark pads this frame's
+            # columns with nulls up to the group-state row count, which
+            # turns an int64 column into float64 (inexact above 2^53)
+            g = pdf.assign(__b=(pdf["__ms"] // step_ms) * step_ms).groupby(
+                ["key", "__b"], sort=False, dropna=False
+            )
+            # the same padding makes __v float64: its sum is exact below 2^53
+            grp = g.size() if value_col is None else g["__v"].sum()
             for (u, bb), n in grp.items():
-                u = str(u) if key_is_str else int(u)
+                u = None if pd.isna(u) else (u if key_is_str else int(u))
                 bb = int(bb)
                 ent = users.setdefault(u, {}).setdefault(
                     bb // period_ms * period_ms, [0, {}]
@@ -1395,13 +1413,20 @@ def stream_cumulate_counter(
             else:
                 del users[u]
         if users:
-            state.update((json.dumps(users),))
+            state.update((n_buckets, json.dumps(list(users.items()))))
             state.setTimeoutTimestamp(int(next_t))
         else:
             state.remove()
         if out_all:
+            pm, wms, keys, ns = zip(*out_all)
+            # object keys: a None among ints must not turn them to float
             yield pd.DataFrame(
-                out_all, columns=["period_ms", "window_ms", "key", "n"]
+                {
+                    "period_ms": pm,
+                    "window_ms": wms,
+                    "key": pd.Series(keys, dtype=object),
+                    "n": ns,
+                }
             )
 
     sel = [
@@ -1412,22 +1437,23 @@ def stream_cumulate_counter(
     if value_col is not None:
         sel.append(F.col(value_col).alias("__v"))
     prepared = sdf.withWatermark(ts_col, f"{delay_ms} milliseconds").select(*sel)
-    nb = CUMULATE_BUCKETS if n_buckets is None else n_buckets
     # the bucket key must survive a JSON round-trip: coarsen only the
     # integral/string keys every caller uses; exotic types keep the
     # per-user keying
-    if nb and not isinstance(key_type, (LongType, StringType)) and not (
+    bucketable = isinstance(key_type, (LongType, StringType)) or (
         key_type.typeName() in ("integer", "short", "byte")
-    ):
-        nb = 0
-    if nb:
-        bucketed = prepared.withColumn(
-            "__bucket", F.pmod(F.xxhash64("key"), F.lit(nb))
+    )
+    if n_buckets and bucketable:
+        k = F.col("key")
+        bucketed = prepared.select(
+            k.cast("string").alias("key"),
+            *prepared.columns[1:],
+            F.pmod(F.xxhash64(k), F.lit(n_buckets)).alias("__bucket"),
         )
         return bucketed.groupBy("__bucket").applyInPandasWithState(
             update_bucketed,
             outputStructType=out_schema,
-            stateStructType=state_schema,
+            stateStructType=bucketed_state_schema,
             outputMode="append",
             timeoutConf=GroupStateTimeout.EventTimeTimeout,
         )

@@ -461,6 +461,115 @@ def test_stream_cumulate_parity(spark, events_dir, tmp_path):
     assert _rows(got, cols) == _rows(want, cols)
 
 
+_CUM_SCHEMA = "event_id LONG, user_id LONG, ts_ms LONG"
+_CUM_T = 1_700_000_000_000 // HOUR * HOUR
+_SENTINEL_USER = -1
+
+
+def _cumulate_slices(users, n_slices, per_slice_ms=20 * 60_000):
+    """One ordered file per slice: every user has a row every 5 min."""
+    slices, eid = [], 0
+    for i in range(n_slices):
+        rows = []
+        for t in range(i * per_slice_ms, (i + 1) * per_slice_ms, 300_000):
+            for u in users:
+                rows.append((eid, u, _CUM_T + t))
+                eid += 1
+        slices.append(rows)
+    return slices
+
+
+def _cumulate_want(spark, slices):
+    from openmetrics_spark.operators.metrics import cumulate_metrics
+
+    b = spark.createDataFrame(
+        [r for s in slices for r in s if r[1] != _SENTINEL_USER], _CUM_SCHEMA
+    ).withColumn("ts", F.timestamp_millis(F.col("ts_ms")))
+    return cumulate_metrics(
+        b, ["user_id"], "ts", step_ms=MIN15, period_ms=HOUR,
+        metric_aggs={"n": F.count(F.lit(1))},
+    ).select("period_ms", "window_ms", F.col("user_id").alias("key"), "n")
+
+
+def _cumulate_got(df):
+    return df.filter(
+        F.col("key").isNull() | (F.col("key") != _SENTINEL_USER)
+    ).select("period_ms", "window_ms", "key", "n")
+
+
+def test_stream_cumulate_null_keys_on_every_keying(spark, tmp_path):
+    """Null user keys count as their own user on the per-user keying,
+    the bucketed keying and the batch ``cumulate_metrics`` alike; a
+    user id above 2^53 in the null key's bucket stays exact."""
+    from openmetrics_spark.streaming.stateful import stream_cumulate_counter
+
+    bucket = F.pmod(F.xxhash64(F.col("id")), F.lit(64))
+    null_bucket = F.pmod(F.xxhash64(F.lit(None).cast("long")), F.lit(64))
+    big = (
+        spark.range(1000)
+        .select((F.col("id") + F.lit(2**60)).alias("id"))
+        .filter(bucket == null_bucket)
+        .first()["id"]
+    )
+    slices = _cumulate_slices([1, 2, None, big], 3)
+    slices[-1].append((10**6, _SENTINEL_USER, _CUM_T + 100 * HOUR))
+    src = str(tmp_path / "src")
+    _write_ordered_files(spark, src, slices, _CUM_SCHEMA)
+    schema = spark.read.parquet(src).schema
+
+    cols = ["period_ms", "window_ms", "key", "n"]
+    want = _rows_nonesafe(_cumulate_want(spark, slices), cols)
+    assert any(r[2] is None for r in want) and any(r[2] == big for r in want)
+    for nb in (0, 64):
+        s = stream_from_dir(spark, src, schema, max_files_per_trigger=1)
+        got = run_to_memory(
+            stream_cumulate_counter(s, "user_id", "ts", MIN15, HOUR, n_buckets=nb)
+        )
+        assert _rows_nonesafe(_cumulate_got(got), cols) == want, nb
+
+
+def test_stream_cumulate_bucketed_restart(spark, tmp_path):
+    """The bucketed CUMULATE state survives a stop and a restart on its
+    checkpoint with the same bucket count, and a restart with another
+    count fails on the first restored bucket instead of stranding
+    users' open periods in the wrong buckets."""
+    from pyspark.errors import StreamingQueryException
+
+    from openmetrics_spark.streaming.stateful import stream_cumulate_counter
+
+    slices = _cumulate_slices(list(range(20)), 4)
+    slices[-1].append((10**6, _SENTINEL_USER, _CUM_T + 100 * HOUR))
+    src, out, chk = (str(tmp_path / d) for d in ("src", "out", "chk"))
+
+    def run(nb):
+        s = stream_from_dir(spark, src, schema, max_files_per_trigger=1)
+        q = (
+            stream_cumulate_counter(s, "user_id", "ts", MIN15, HOUR, n_buckets=nb)
+            .writeStream.format("parquet")
+            .option("path", out)
+            .option("checkpointLocation", chk)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+
+    _write_ordered_files(spark, src, slices[:2], _CUM_SCHEMA)
+    schema = spark.read.parquet(src).schema
+    run(4)
+    n_before = spark.read.parquet(out).count()
+    assert n_before > 0
+
+    _write_ordered_files(spark, src, slices[2:], _CUM_SCHEMA, t0=1_000_000_100)
+    with pytest.raises(StreamingQueryException, match="n_buckets=4, this query n_buckets=8"):
+        run(8)
+    assert spark.read.parquet(out).count() == n_before
+
+    run(4)
+    cols = ["period_ms", "window_ms", "key", "n"]
+    got = _cumulate_got(spark.read.parquet(out))
+    assert _rows(got, cols) == _rows(_cumulate_want(spark, slices), cols)
+
+
 def _rows_nonesafe(df, cols):
     return sorted(
         (tuple(r) for r in df.select(*cols).collect()),
@@ -645,12 +754,11 @@ def test_stream_reduce_redundant_impressions_parity(spark, events_dir, tmp_path)
     assert got_act == want_act
 
 
-def _write_ordered_files(spark, out_dir, batches, schema):
-    """Write each batch as one file with strictly increasing mtimes so
-    FileStreamSource replays them in order."""
+def _write_ordered_files(spark, out_dir, batches, schema, t0=1_000_000_000):
+    """Write each batch as one file with strictly increasing mtimes
+    (from ``t0`` seconds) so FileStreamSource replays them in order."""
     import os
 
-    t0 = 1_000_000_000
     for i, rows in enumerate(batches):
         before = set(os.listdir(out_dir)) if os.path.exists(out_dir) else set()
         spark.createDataFrame(rows, schema).withColumn(
