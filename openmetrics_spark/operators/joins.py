@@ -22,13 +22,16 @@ these are the batch (DataFrame) twins:
 Scale notes: ``asof_join`` uses the union+last_value trick — ONE
 shuffle+sort of |L|+|R| rows, no range-explosion, no per-key loop; this
 is the standard scalable as-of on MPP engines. ``inferred_join`` is
-partition-then-aggregate: each scope joins on its equi-keys (so
-Catalyst plans a hash/SMJ join, never a nested-loop) and filters to the
-window, every candidate pair is tagged with its scope's rank, and the
-union of all ranks goes through ONE shuffle on the right id and one
-``min_by(rank, |Δt|, ...)`` aggregate. No anti-join chain, no
-lineage cut inside the operator: callers that chain inferred joins
-cut lineage with ``tables.stage_parquet`` at their stage boundaries.
+partition-then-aggregate with one partitioning for every rank: each
+side is read once and exploded into one tagged key per rank (the rank
+plus that rank's key values, NULL in the fields it does not use), so
+ONE equi-join on the tagged key (a hash/SMJ join, never a nested loop)
+yields the candidates of the FK and of every scope, with the time
+window as its residual filter. The candidates go through ONE shuffle
+on the right id and one ``min_by(rank, |Δt|, ...)`` aggregate. No
+per-rank join, no union, no anti-join chain, no lineage cut inside the
+operator: callers that chain inferred joins cut lineage with
+``tables.stage_parquet`` at their stage boundaries.
 """
 
 from __future__ import annotations
@@ -36,8 +39,9 @@ from __future__ import annotations
 from collections.abc import Sequence
 from dataclasses import dataclass
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import DataType, NumericType
 
 
 def asof_join(
@@ -138,23 +142,61 @@ class Scope:
     keys: tuple[str, ...]
 
 
-def _candidates(
-    left: DataFrame,
-    right: DataFrame,
-    cond: list[Column],
-    rank: int,
-    dist: Column,
-) -> DataFrame:
-    """One rank's candidate pairs: ``__rid, __rank, __d, __lms, __lrow``
-    for every (right, left) pair that satisfies ``cond``. ``left`` and
-    ``right`` are the aliased ``__L`` / ``__R`` projections."""
-    return right.join(left, cond, "inner").select(
-        "__rid",
-        F.lit(rank).alias("__rank"),
-        dist.cast("long").alias("__d"),
-        "__lms",
-        "__lrow",
-    )
+def _q(name: str) -> str:
+    """``name`` as a quoted SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _key_type(spark, col: str, a: DataType, b: DataType) -> str:
+    """The SQL type both sides of key column ``col`` are cast to: their
+    own type when they agree, else the wider of two numeric types as
+    Spark's coercion picks it (int + bigint -> bigint). A cast never
+    narrows, so no key value can raise under ANSI; keys of unrelated
+    types are an error rather than a silent string comparison."""
+    if a == b:
+        return a.simpleString()
+    if not (isinstance(a, NumericType) and isinstance(b, NumericType)):
+        raise TypeError(
+            f"inferred_join key {col!r} is {a.simpleString()} on one side and "
+            f"{b.simpleString()} on the other; cast one side first"
+        )
+    expr = f"coalesce(CAST(NULL AS {a.simpleString()}), CAST(NULL AS {b.simpleString()})) AS t"
+    return spark.range(0).selectExpr(expr).schema["t"].dataType.simpleString()
+
+
+def _tagged_keys(
+    fk_col: str | None,
+    scopes: Sequence[Scope],
+    fk_type: str | None,
+    fields: dict[str, tuple[str, str]],
+) -> str:
+    """SQL for one side's tagged keys: ``explode`` of an array with one
+    arm per rank, each a ``named_struct('r', rank, ...)`` holding that
+    rank's key values and NULL in every field it does not use, or NULL
+    when one of its keys is null (or, for a string key of a scope, empty).
+    ``fk_col`` is this side's FK column (rank 0); ``fields`` maps each
+    scope key column to its struct field and type."""
+
+    def arm(rank: int, valid: list[str], used: dict[str, str]) -> str:
+        vals = [f"'r', {rank}"]
+        if fk_type is not None:
+            vals.append(f"'fk', CAST({used.get('fk', 'NULL')} AS {fk_type})")
+        vals += [
+            f"'{f}', CAST({used.get(c, 'NULL')} AS {t})" for c, (f, t) in fields.items()
+        ]
+        return f"CASE WHEN {' AND '.join(valid)} THEN named_struct({', '.join(vals)}) END"
+
+    arms = []
+    if fk_col is not None:
+        arms.append(arm(0, [f"{_q(fk_col)} IS NOT NULL"], {"fk": _q(fk_col)}))
+    for rank, scope in enumerate(scopes, start=1):
+        valid = []
+        for c in scope.keys:
+            valid.append(f"{_q(c)} IS NOT NULL")
+            if fields[c][1] == "string":
+                valid.append(f"{_q(c)} <> ''")
+        arms.append(arm(rank, valid, {c: _q(c) for c in scope.keys}))
+    return f"explode(array({', '.join(arms)})) AS __k"
 
 
 def inferred_join(
@@ -172,7 +214,8 @@ def inferred_join(
     content_filter: tuple[str, str] | None = None,
 ) -> DataFrame:
     """Scope-fallback nearest-in-time join (the batch oracle of the
-    reference's BaseInferred state machine), as ONE ranked pick.
+    reference's BaseInferred state machine), as ONE equi-join on a
+    tagged key and ONE ranked pick.
 
     Every candidate (right row, left row) pair carries a rank:
 
@@ -187,87 +230,89 @@ def inferred_join(
       carries the right row's content id whenever the right row has
       one (reference: inferred/ContentId.java:66-95).
 
-    The candidates of every rank are unioned, shuffled once on the
-    right id and reduced by one ``min_by`` over
-    ``(rank, |Δt|, left_ms, left_payload)``: the lowest rank wins
-    before distance is compared, so a row matched at scope i keeps
-    that pick even when scope i+1 has a nearer candidate; within a
-    rank the temporally nearest, then earlier, then smallest payload
-    wins — deterministic (reference: BaseInferred.java:605-650).
+    Each side is read once and exploded into one tagged key ``__k`` per
+    rank whose keys are valid: ``(r, fk, k0, k1, ...)``, with one field
+    per key column of any rank, typed as the wider of the two sides'
+    columns, and NULL in the fields rank ``r`` does not use. Equal
+    tagged keys are exactly the equal keys of one rank, so a single
+    equi-join on ``__k`` (one shuffle or broadcast, never a nested
+    loop) yields every rank's candidates; the window and content filter
+    are its residual condition on ranks > 0.
+
+    The candidates are shuffled once on the right id and reduced by one
+    ``min_by`` over ``(rank, |Δt|, left_ms, left_payload)`` (``|Δt|`` is
+    0 on rank 0): the lowest rank wins before distance is compared, so
+    a row matched at scope i keeps that pick even when scope i+1 has a
+    nearer candidate; within a rank the temporally nearest, then
+    earlier, then smallest payload wins — deterministic (reference:
+    BaseInferred.java:605-650).
 
     ``right_outer=True`` keeps unmatched right rows with a null
     ``__lpick`` (the view→insertion instance); else they are dropped
     (inner, like insertion→impression and impression→action).
 
-    The operator does not cut lineage: ``left`` and ``right`` are each
-    read once per rank. Callers that chain joins, each stage's left
-    being the previous stage's output, cut lineage at the stage
-    boundaries with ``tables.stage_parquet`` (the reference splits the
-    same chain at Kafka topics).
+    The operator does not cut lineage. Callers that chain joins, each
+    stage's left being the previous stage's output, cut lineage at the
+    stage boundaries with ``tables.stage_parquet`` (the reference
+    splits the same chain at Kafka topics).
 
     Returns: right columns + ``__lpick`` struct of ``left_payload``.
     """
-    lrow = F.struct(*[left[c] for c in left_payload]).alias("__lrow")
-    lms = F.unix_millis(left[left_ts]).alias("__lms")
-    rkeyed = right.withColumn("__rid", F.col(right_id))
-    cands: list[DataFrame] = []
+    if fk is None and not scopes:
+        raise ValueError("inferred_join needs an fk or at least one scope")
+    spark = right.sparkSession
+    ltypes = {f.name: f.dataType for f in left.schema.fields}
+    rtypes = {f.name: f.dataType for f in right.schema.fields}
+    rfk, lpk = fk if fk is not None else (None, None)
+    fk_type = None if fk is None else _key_type(spark, lpk, rtypes[rfk], ltypes[lpk])
+    cols = dict.fromkeys(c for s in scopes for c in s.keys)
+    fields = {
+        c: (f"k{j}", _key_type(spark, c, ltypes[c], rtypes[c]))
+        for j, c in enumerate(cols)
+    }
 
-    if fk is not None:
-        rfk, lpk = fk
-        l = left.select(left[lpk].alias("__lpk"), lms, lrow).alias("__L")
-        r = rkeyed.select("__rid", F.col(rfk).alias("__rfk")).alias("__R")
-        cands.append(
-            _candidates(l, r, [F.col("__rfk") == F.col("__lpk")], 0, F.lit(0))
+    lsel = [
+        f"unix_millis({_q(left_ts)}) AS __lms",
+        f"struct({', '.join(_q(c) for c in left_payload)}) AS __lrow",
+        _tagged_keys(lpk, scopes, fk_type, fields),
+    ]
+    rsel = [
+        f"{_q(right_id)} AS __rid",
+        f"unix_millis({_q(right_ts)}) AS __rms",
+        _tagged_keys(rfk, scopes, fk_type, fields),
+    ]
+    residual = [
+        f"__lms >= __rms - {int(window_before_ms)}",
+        f"__lms <= __rms + {int(window_after_ms)}",
+    ]
+    if content_filter is not None:
+        lc, rc = content_filter
+        lsel.append(f"{_q(lc)} AS __lcontent")
+        rsel.append(f"{_q(rc)} AS __rcontent")
+        residual.append(
+            "(__rcontent IS NULL OR __rcontent = '' OR __lcontent = __rcontent)"
         )
-
-    string_cols = {f.name for f in right.schema.fields if f.dataType.simpleString() == "string"}
-    for i, scope in enumerate(scopes, start=1):
-        on = scope.keys
-        lsel = [*on, lms, lrow]
-        rsel = [*on, F.unix_millis(F.col(right_ts)).alias("__rms"), "__rid"]
-        if content_filter is not None:
-            lc, rc = content_filter
-            lsel.append(left[lc].alias("__lcontent"))
-            rsel.append(F.col(rc).alias("__rcontent"))
-        r = rkeyed
-        for k in on:
-            r = r.filter(F.col(k).isNotNull())
-            if k in string_cols:
-                r = r.filter(F.col(k) != "")
-        # explicit side aliases: left/right usually derive from the same
-        # base frame, and same-name equality on shared-lineage frames
-        # trips Spark's "trivially true equals predicate" ambiguity
-        l = left.select(*lsel).alias("__L")
-        r = r.select(*rsel).alias("__R")
-        cond = [F.col(f"__L.{c}") == F.col(f"__R.{c}") for c in on] + [
-            F.col("__lms") >= F.col("__rms") - F.lit(window_before_ms),
-            F.col("__lms") <= F.col("__rms") + F.lit(window_after_ms),
-        ]
-        if content_filter is not None:
-            cond.append(
-                F.col("__rcontent").isNull()
-                | (F.col("__rcontent") == "")
-                | (F.col("__lcontent") == F.col("__rcontent"))
-            )
-        dist = F.abs(F.col("__lms") - F.col("__rms"))
-        cands.append(_candidates(l, r, cond, i, dist))
-
-    all_cands = cands[0]
-    for c in cands[1:]:
-        all_cands = all_cands.unionByName(c)
-    pick = all_cands.groupBy("__rid").agg(
-        F.min_by(
+    # explicit side aliases: left/right usually derive from the same
+    # base frame, and same-name equality on shared-lineage frames
+    # trips Spark's "trivially true equals predicate" ambiguity
+    l = left.selectExpr(*lsel).where("__k IS NOT NULL").alias("__L")
+    r = right.selectExpr(*rsel).where("__k IS NOT NULL").alias("__R")
+    cond = f"__L.__k = __R.__k AND (__R.__k.r = 0 OR ({' AND '.join(residual)}))"
+    pick = (
+        r.join(l, F.expr(cond), "inner")
+        .selectExpr(
+            "__rid",
+            "named_struct('rank', __R.__k.r,"
+            " 'd', CASE WHEN __R.__k.r = 0 THEN 0L ELSE abs(__lms - __rms) END,"
+            " '__lms', __lms, '__lrow', __lrow) AS __ord",
             "__lrow",
-            F.struct(
-                F.col("__rank").alias("rank"),
-                F.col("__d").alias("d"),
-                F.col("__lms"),
-                F.col("__lrow"),
-            ),
-        ).alias("__lpick")
+        )
+        .groupBy("__rid")
+        .agg(F.expr("min_by(__lrow, __ord) AS __lpick"))
     )
     how = "left" if right_outer else "inner"
-    return rkeyed.join(pick, on="__rid", how=how).drop("__rid")
+    keyed = right.selectExpr("*", f"{_q(right_id)} AS __rid")
+    return keyed.join(pick, on="__rid", how=how).drop("__rid")
 
 
 def fifo_dedupe(

@@ -637,10 +637,10 @@ def inferred_view_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scope-fallback nearest-in-time inferred join: each click gets the
     temporally-nearest view ≤10 m before it by the same user, preferring
     views sharing the click's props.k; unmatched clicks kept (right
-    outer). Each scope is an equi-key hash join to ranked candidates —
-    no nested-loop — and one min_by aggregate over both scopes' ranks
-    picks, so a (u, k) match is never overridden by a nearer (u)
-    candidate."""
+    outer). Both scopes' candidates come from one equi-join on a
+    rank-tagged key — no nested-loop — and one min_by aggregate over
+    their ranks picks, so a (u, k) match is never overridden by a
+    nearer (u) candidate."""
     from openmetrics_spark.operators.joins import Scope, inferred_join
 
     ev = table(spark, sf_dir, "events")

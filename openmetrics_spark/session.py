@@ -87,14 +87,11 @@ def get_spark(app_name: str = "openmetrics_spark", cpus: int | None = None) -> S
         # Let the planner pick shuffled-hash over sort-merge when its
         # size conditions hold (guide §3.1/§9): SHJ skips the per-side
         # sort, and AQE's skew-join splitting covers SHJ as well. The
-        # r12-deferred flip for inferred_view_attribution's 4
-        # event-subset SMJs; scale-neutral planner preference, not a
-        # local-mode constant. Env-gated for A/B
-        # (SPARK_GRAFT_PREFER_SMJ=true restores the Spark default).
-        .config(
-            "spark.sql.join.preferSortMergeJoin",
-            os.environ.get("SPARK_GRAFT_PREFER_SMJ", "false"),
-        )
+        # join-back of every inferred join (the right rows against their
+        # ranked picks) plans as an SHJ here, and as an SMJ that sorts
+        # both sides under Spark's default; scale-neutral planner
+        # preference, not a local-mode constant.
+        .config("spark.sql.join.preferSortMergeJoin", "false")
         # ... and let AQE rewrite a planned SMJ to SHJ at runtime when
         # every post-shuffle partition's build side is small (default 0
         # = off; guide §3.1). Catches the joins whose STATIC size
@@ -102,7 +99,7 @@ def get_spark(app_name: str = "openmetrics_spark", cpus: int | None = None) -> S
         # build side is an aggregate of match ids).
         .config(
             "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-            os.environ.get("SPARK_GRAFT_SHJ_LOCAL_MAP", str(64 * 1024 * 1024)),
+            str(64 * 1024 * 1024),
         )
     )
     # AQE initial shuffle width: start wide, let coalesce shrink.

@@ -1,6 +1,6 @@
 """Materialize CONTENT-DISJOINT N-fold replicas of the sf0.1 tables as
-a scratch "sf dir" so `scripts/time_queries.py` (and any registered
-query) can be timed at a larger scale factor than the shipped test
+a scratch "sf dir" so `scripts/profile_query.py --sf-dir` (and any
+registered query) can be timed at a larger scale factor than the shipped test
 data (r12 verdict items 6/7: the sf0.1 bench is fixed-cost-bound and
 cannot show data-proportional effects).
 

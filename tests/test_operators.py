@@ -188,6 +188,54 @@ def test_inferred_join_ranked_pick(spark):
     assert run(right_outer=False) == {k: v for k, v in want.items() if v is not None}
 
 
+def test_inferred_join_tagged_key(spark):
+    """The tagged key of the one candidate join: a key field takes the
+    wider of the two sides' types, so an int key matches a bigint one
+    and a bigint beyond int's range neither matches nor raises; a pair
+    equal only on the coarser of two scopes sharing ``uid`` is ranked
+    by that scope; an empty string key is dropped on the scope ranks
+    but not on the FK rank."""
+    left = spark.createDataFrame(
+        [
+            ("v1", 7, "a", "p1", 100_000),
+            ("v2", 7, "b", "", 101_000),
+            ("v3", 8, "", "p3", 100_000),
+            ("v4", 8, "x", "p4", 100_400),
+        ],
+        "lid string, uid int, k string, pk string, ms long",
+    ).withColumn("ts", F.timestamp_millis("ms"))
+    right = spark.createDataFrame(
+        [
+            # scope 1 (uid, k) keeps v2 at 800 ms over scope 2's v1 at 200 ms
+            ("c1", 7, "b", None, 100_200),
+            # equal only on scope 2 (uid): ranked there, nearest wins
+            ("c2", 7, "z", None, 100_100),
+            # 2^32 + 7 would wrap to uid 7 in an int cast
+            ("c3", 2**32 + 7, "a", None, 100_000),
+            # an empty FK still joins on the FK rank (v2's pk is "")
+            ("c4", 8, "q", "", 100_000),
+            # an empty k never matches on scope 1 (v3 at 500 ms)
+            ("c5", 8, "", None, 100_500),
+        ],
+        "cid string, uid bigint, k string, fk string, ms long",
+    ).withColumn("ts", F.timestamp_millis("ms"))
+    out = inferred_join(
+        left,
+        right,
+        scopes=[Scope(("uid", "k")), Scope(("uid",))],
+        fk=("fk", "pk"),
+        left_ts="ts",
+        right_ts="ts",
+        window_before_ms=10_000,
+        window_after_ms=1_000,
+        left_payload=["lid"],
+        right_id="cid",
+        right_outer=True,
+    )
+    got = {r.cid: r.pick for r in out.select("cid", F.col("__lpick.lid").alias("pick")).collect()}
+    assert got == {"c1": "v2", "c2": "v1", "c3": None, "c4": "v2", "c5": "v4"}
+
+
 def test_add_latest_impressions_exclusion_and_caps(spark):
     from openmetrics_spark.operators.enrich import add_latest_impressions
 

@@ -341,10 +341,17 @@ def test_inferred_join_is_one_ranked_pick(spark, sf_dir):
     """The insertion→impression join (FK + 3 scopes) is one ranked
     min_by pick: no anti-join chain over the unmatched remainder and no
     localCheckpoint lineage cut (an ExistingRDD scan) inside the
-    operator."""
+    operator. Every rank's candidates come from ONE equi-join on the
+    tagged key, so the query plans exactly two joins (that one and the
+    join-back of the picks onto the right rows), not one per rank, and
+    never a nested-loop join."""
     plan = _plan(spark, sf_dir, "bfj_joined_impressions")
     assert "LeftAnti" not in plan, plan[:3000]
     assert "ExistingRDD" not in plan, plan[:3000]
+    nodes = [line.lstrip(" :+-*()0123456789").split(" ")[0] for line in plan.splitlines()]
+    joins = [n for n in nodes if n.endswith("Join") or n == "CartesianProduct"]
+    assert "BroadcastNestedLoopJoin" not in joins, plan[:3000]
+    assert len(joins) == 2, (joins, plan[:3000])
 
 
 def test_curation_pipeline_no_cartesian_no_raw_doc_window(spark, sf_dir):

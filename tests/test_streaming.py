@@ -842,6 +842,83 @@ def test_stream_inferred_join_late_side_output(spark, tmp_path):
     assert rows[13] == (None, True)  # late click -> side channel
 
 
+def test_stream_state_functions_keep_64bit_ids(spark, tmp_path):
+    """Ids and content ids above 2^53 come out of the inferred join and
+    AddLatestImpressions exact. Batch 2 holds one user's view and click
+    with 2^60+ ids next to many users whose pending clicks time out in
+    the same batch, so the Arrow batch holds more state rows than data
+    rows and pyspark pads its data columns with nulls; each group's
+    own slice of it must still reach the state function as int64."""
+    from openmetrics_spark.streaming.stateful import (
+        stream_add_latest_impressions,
+        stream_inferred_join,
+    )
+
+    T = 1_700_000_000_000
+    HOUR_ = 3_600_000
+    BIG = 2**60 + 1
+    users = range(100, 300)  # enough timed-out keys in every state partition
+    batches = [
+        [(10 * u, u, "view", T, 1) for u in users]
+        + [(10 * u + 1, u, "click", T + 5000, 2) for u in users]
+        + [(1, 9, "view", T + HOUR_, 0)],
+        [
+            (BIG, 5, "view", T + HOUR_ + 1000, BIG + 4),
+            (BIG + 2, 5, "click", T + HOUR_ + 6000, 7),
+            (2, 9, "view", T + 2 * HOUR_, 0),
+        ],
+        [(3, 9, "view", T + 3 * HOUR_, 0)],
+    ]
+    src = str(tmp_path / "src")
+    schema = "event_id LONG, user_id LONG, event_type STRING, ts_ms LONG, content_id LONG"
+    _write_ordered_files(spark, src, batches, schema)
+    s = stream_from_dir(
+        spark, src, spark.read.parquet(src).schema, max_files_per_trigger=1
+    )
+    views = s.filter(F.col("event_type") == "view")
+    clicks = s.filter(F.col("event_type") == "click")
+
+    joined = run_to_memory(
+        stream_inferred_join(
+            views,
+            clicks,
+            user_col="user_id",
+            left_id_col="event_id",
+            right_id_col="event_id",
+            left_ts_col="ts",
+            right_ts_col="ts",
+            window_before_ms=600_000,
+        ),
+        output_mode="append",
+    )
+    pairs = {r["right_id"]: r["left_id"] for r in joined.collect()}
+    assert pairs[BIG + 2] == BIG
+    assert pairs[10 * 100 + 1] == 10 * 100
+
+    def side(df, id_col, ms_col):
+        return df.select(
+            "user_id",
+            F.col("event_id").alias(id_col),
+            F.col("ts_ms").alias(ms_col),
+            "content_id",
+            "ts",
+        )
+
+    latest = run_to_memory(
+        stream_add_latest_impressions(
+            side(views, "impression_id", "imp_ms"),
+            side(clicks, "action_id", "act_ms"),
+        ),
+        output_mode="append",
+    )
+    got = {
+        (r["impression_id"], r["content"])
+        for r in latest.collect()
+        if r["action_id"] == BIG + 2
+    }
+    assert got == {(BIG, BIG + 4)}
+
+
 def test_streaming_ttl_inferred_join_semantics(spark, sf_dir):
     """The production-TTL join's eviction semantics, as invariants:
     the drop population is non-empty AND every FK match/drop respects
